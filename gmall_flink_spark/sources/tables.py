@@ -13,6 +13,10 @@ must stream, and AQE handles partition sizing.
 
 from __future__ import annotations
 
+import functools
+import os
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -29,27 +33,127 @@ TABLES = (
 )
 
 
-#: session memo of the RAW ``spark.read.parquet`` DataFrames (optimization
-#: r15, the per-query session floor): every ``spark.read.parquet`` call is
-#: a driver-side file-listing + schema-inference round trip (~120-180 ms
-#: measured), and a suite run issues hundreds of them for the same ten
-#: immutable paths. The memo holds an UNEXECUTED plan object — never data;
-#: scans still stream and re-list files at execution — keyed on the same
-#: (appId, path, content stamp) rule as every other memo (memo_key), so an
-#: in-session rewrite is picked up and a fresh session never sees a dead
-#: frame. The timestamp normalization below stays per-call: it reads the
-#: live session timezone, which must keep failing loudly if a caller
-#: un-pins UTC mid-session. Registered in clear_session_memos.
-_TABLE_MEMO: dict[tuple, DataFrame] = {}
+#: every session stage, in definition order (session_stage appends itself);
+#: clear_session_memos wipes exactly this list
+_STAGES: list = []
+
+
+def _stamp(sf_dir: str, source: str) -> tuple[int, int]:
+    """Content stamp of ``{sf_dir}/{source}.parquet``: (mtime_ns, size),
+    one os.stat; (0, 0) when the file is missing."""
+    try:
+        st = os.stat(f"{sf_dir.rstrip('/')}/{source}.parquet")
+        return (st.st_mtime_ns, st.st_size)
+    except OSError:
+        return (0, 0)
+
+
+def session_stage(source: str):
+    """Memoize a shared ``(spark, sf_dir)`` stage per Spark session and per
+    content of ``{sf_dir}/{source}.parquet``: the one cache rule every
+    shared stage (tokenized docs, LSH candidates, trainer states, ...)
+    and every raw table reader uses.
+
+    The key is ``(applicationId, sf_dir, source, stamp)``. The
+    applicationId part makes a stopped/recreated session (whose
+    localCheckpoint blocks died with its context) rebuild instead of
+    serving a dead frame; the stamp (mtime_ns + size) makes an in-session
+    rewrite of the source parquet rebuild instead of serving stale data.
+    A miss evicts foreign-session entries and this sf_dir's superseded
+    stamp, so the memo only ever holds the live context's data.
+
+    One lock per stage, held across the build: concurrent first callers
+    (``warm`` threads) build once and all get the same object; different
+    stages build concurrently. Stages call each other along an acyclic
+    DAG (caller, then callee), so nested stage locks cannot deadlock; a
+    stage must never call itself. The body owns its result shape and its
+    own ``localCheckpoint`` policy (eager, lazy or none).
+
+    Each stage registers itself in ``_STAGES``; ``stage.wipe()`` drops one
+    stage's entries and ``clear_session_memos`` drops them all."""
+
+    def wrap(build):
+        memo: dict = {}
+        lock = threading.Lock()
+
+        @functools.wraps(build)
+        def stage(spark: SparkSession, sf_dir: str):
+            app_id = spark.sparkContext.applicationId
+            key = (app_id, sf_dir, source, _stamp(sf_dir, source))
+            with lock:
+                if key not in memo:
+                    for k in [k for k in memo if k[0] != app_id or k[1] == sf_dir]:
+                        del memo[k]
+                    memo[key] = build(spark, sf_dir)
+                return memo[key]
+
+        def wipe() -> None:
+            with lock:
+                memo.clear()
+
+        stage.memo = memo
+        stage.wipe = wipe
+        _STAGES.append(stage)
+        return stage
+
+    return wrap
+
+
+def warm(spark: SparkSession, sf_dir: str, *stages) -> list:
+    """Build independent ``stages`` concurrently, one driver thread each,
+    and return their results in order, re-raising the first build error.
+    A stage is a chain of small driver-synced jobs that leaves executors
+    idle between jobs; overlapping independent chains lets Spark's FIFO
+    scheduler back-fill one chain's idle slots with another's tasks. The
+    threads inherit the caller's local properties and job tags, so their
+    jobs stay charged to the query that asked."""
+    from pyspark import inheritable_thread_target
+
+    results: list = [None] * len(stages)
+    errors: list = []
+
+    @inheritable_thread_target(spark)
+    def build(i: int) -> None:
+        try:
+            results[i] = stages[i](spark, sf_dir)
+        except BaseException as exc:  # noqa: BLE001 - re-raised by the caller
+            errors.append(exc)
+
+    threads = [threading.Thread(target=build, args=(i,)) for i in range(len(stages))]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    if errors:
+        raise errors[0]
+    return results
+
+
+def _reader(name: str):
+    """The RAW ``spark.read.parquet`` frame of one table as a session
+    stage (optimization r15, the per-query session floor): every read is a
+    driver-side file-listing + schema-inference round trip (~120-180 ms
+    measured), and a suite run issues hundreds of them for the same ten
+    immutable paths. The stage holds an UNEXECUTED plan object, never
+    data: scans still stream and re-list files at execution."""
+
+    @session_stage(name)
+    def read(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+    return read
+
+
+_READERS = {name: _reader(name) for name in TABLES}
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; have {TABLES}")
-    key = memo_key(spark, sf_dir, name, _TABLE_MEMO)
-    if key not in _TABLE_MEMO:
-        _TABLE_MEMO[key] = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    df = _TABLE_MEMO[key]
+    # the timestamp normalization below stays per call: it reads the live
+    # session timezone, which must keep failing loudly if a caller un-pins
+    # UTC mid-session
+    df = _READERS[name](spark, sf_dir)
     if name == "events":
         # Older testdata stored ts as parquet TIMESTAMP(NANOS), read as long
         # nanos (spark.sql.legacy.parquet.nanosAsLong); truncate to micros —
@@ -96,35 +200,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-def memo_key(spark: SparkSession, sf_dir: str, name: str, memo: dict) -> tuple:
-    """Key for session-scoped DataFrame/value memos, safe against the two
-    staleness hazards of a bare (appId, sf_dir) key: the table's parquet
-    being REWRITTEN in-session under the same path (content stamp:
-    mtime_ns + size, one os.stat), and dead-session entries accumulating
-    forever (entries keyed by a different applicationId are evicted here,
-    so the memo only ever holds the live context's data)."""
-    import os as _os
-
-    app_id = spark.sparkContext.applicationId
-    path = f"{sf_dir.rstrip('/')}/{name}.parquet"
-    try:
-        st = _os.stat(path)
-        stamp = (st.st_mtime_ns, st.st_size)
-    except OSError:
-        stamp = (0, 0)
-    # evict foreign-session entries AND same-session entries for this
-    # (sf_dir, name) whose stamp no longer matches — otherwise an
-    # in-session rewrite leaves the superseded entry (and its pinned
-    # localCheckpoint blocks) referenced for the session's lifetime
-    for k in [
-        k
-        for k in memo
-        if k[0] != app_id or (k[1:3] == (sf_dir, name) and k[3] != stamp)
-    ]:
-        del memo[k]
-    return (app_id, sf_dir, name, stamp)
-
-
 def spread(df: DataFrame, *cols: str) -> DataFrame:
     """Rebalance a narrow scan before heavy per-row compute.
 
@@ -160,12 +235,13 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
 def clear_session_memos(
     disk_artifacts: bool = True, sf_dir: str | None = None
 ) -> None:
-    """Reset every session-memoized shared stage (winnow fingerprints,
-    tokenized docs, LSH candidates, near-dup components, IVF assignment,
-    PQ codebooks, ...). Callers that must observe or time a COLD pipeline
-    (scripts/scaling_probe.py, scripts/explain_audit.py) use this so a
-    warm memo can't turn a measured run into a cache read. Single source
-    of truth: adding a new memo means adding it here, and only here.
+    """Wipe every registered session stage (``session_stage``: shared
+    stages and raw table readers alike). Callers that must observe or
+    time a COLD pipeline (perfbench, bench.py, scripts/scaling_probe.py,
+    scripts/explain_audit.py) use this so a warm memo can't turn a
+    measured run into a cache read. A stage registers itself when its
+    module is imported, so there is no list to keep in sync; a stage in a
+    module nobody imported has nothing to wipe.
 
     ``disk_artifacts=False`` keeps the write-once CROSS-SESSION artifacts
     (the persisted component mapping) while still dropping the in-memory
@@ -178,73 +254,18 @@ def clear_session_memos(
     unscoped wipe deletes every SF's artifact, and a concurrent reader of
     another SF's mapping then dies mid-scan with FILE_NOT_EXIST (this
     raced the r13 sweep against the explain audit)."""
-    from gmall_flink_spark.queries.llm_dedup import (
-        _COMPONENTS,
-        _DOC_STATS,
-        _DOC_TOKS,
-        _DOC_UNITS,
-        _EXACT_PAIRS,
-        _LSH_CANDS,
-        _MINHASH_MX,
-        _SAMPLE_COMPONENTS,
-        _SAMPLE_EXACT,
-        _SUBSTR_IDX,
-        _VERIFIED,
-    )
-    from gmall_flink_spark.queries.datasel import (
-        _BPE_SAMPLED,
-        _BPE_STATE,
-        _UNIGRAM_VOCAB,
-        _WORD_OCC,
-        _WP_STATE,
-    )
-    from gmall_flink_spark.queries.classify import _NB_SCORED_MEMO
-    from gmall_flink_spark.queries.llm_pipeline import _CLEAN_RANKED, _PACK_TOTALS
-    from gmall_flink_spark.queries.similarity import (
-        _ASSIGNED_MEMO,
-        _NEARDUP_PAIRS,
-        _PQ_BOOKS_MEMO,
-    )
-    from gmall_flink_spark.queries.text import _WINNOW_DOCS
-
-    for memo in (
-        _BPE_SAMPLED,
-        _BPE_STATE,
-        _CLEAN_RANKED,
-        _UNIGRAM_VOCAB,
-        _WORD_OCC,
-        _WP_STATE,
-        _WINNOW_DOCS,
-        _COMPONENTS,
-        _DOC_STATS,
-        _DOC_TOKS,
-        _DOC_UNITS,
-        _EXACT_PAIRS,
-        _LSH_CANDS,
-        _MINHASH_MX,
-        _SAMPLE_COMPONENTS,
-        _SAMPLE_EXACT,
-        _SUBSTR_IDX,
-        _ASSIGNED_MEMO,
-        _NB_SCORED_MEMO,
-        _NEARDUP_PAIRS,
-        _PACK_TOTALS,
-        _PQ_BOOKS_MEMO,
-        _TABLE_MEMO,
-        _VERIFIED,
-    ):
-        memo.clear()
+    for stage in _STAGES:
+        stage.wipe()
     if not disk_artifacts:
         return
     # the component mapping also persists as a cross-session disk artifact
     # (queries/llm_dedup._components); a cold-cost measurement must wipe it
     # too or the "cold" run is a parquet read of the artifact
     import glob
-    import os as _os
     import shutil
 
     from gmall_flink_spark.sources.materialize import CACHE_ROOT, cache_key
 
     key = cache_key(sf_dir) if sf_dir else "*"
-    for p in glob.glob(_os.path.join(CACHE_ROOT, key, "neardup_components-*")):
+    for p in glob.glob(os.path.join(CACHE_ROOT, key, "neardup_components-*")):
         shutil.rmtree(p, ignore_errors=True)

@@ -130,7 +130,6 @@ def test_components_artifact_persists_and_invalidates(spark, tmp_path):
     import time
 
     from gmall_flink_spark.queries.llm_dedup import (
-        _COMPONENTS,
         _components,
         _components_artifact_path,
     )
@@ -148,7 +147,7 @@ def test_components_artifact_persists_and_invalidates(spark, tmp_path):
     assert os.path.exists(p1) and first, (p1, first)
     build_mark = os.path.getmtime(p1)
 
-    _COMPONENTS.clear()  # drop the L1 memo; the artifact must serve the read
+    _components.wipe()  # drop the L1 stage; the artifact must serve the read
     again = sorted(map(tuple, _components(spark, sf).collect()))
     assert again == first
     assert os.path.getmtime(p1) == build_mark  # read, not rebuilt
@@ -200,6 +199,25 @@ def test_components_stamp_covers_every_producer_layer(tmp_path, monkeypatch):
     assert qd._components_stamp(sf) != base
     monkeypatch.undo()
     assert qd._components_stamp(sf) == base
+
+    # 4) the producers are session stages: the stamp must hash each
+    # stage's BODY (inspect unwraps the functools.wraps wrapper), not the
+    # wrapper every stage shares, or editing a producer would not rebuild
+    import inspect
+
+    real_getsource, hashed = inspect.getsource, []
+
+    def _recording_getsource(obj):
+        hashed.append(real_getsource(obj))
+        return hashed[-1]
+
+    monkeypatch.setattr(inspect, "getsource", _recording_getsource)
+    qd._components_stamp(sf)
+    monkeypatch.undo()
+    assert any(
+        "def _lsh_cands" in src and "lsh_candidates_two_level(" in src
+        for src in hashed
+    ), "the stamp no longer hashes the _lsh_cands body"
 
 
 def test_merge_components_equals_full_rebuild(spark):

@@ -189,39 +189,55 @@ def test_data_stamp_memoized_no_rehash_on_hit(spark, tmp_path, monkeypatch):
 
 def test_clear_session_memos_covers_every_memo():
     """clear_session_memos is the ONE wipe the probes, the explain audit,
-    and every cold-cost measurement rely on; a memo dict that exists but
-    is not registered silently serves warm state to a measurement that
-    believes it cleared everything (r14 finding: _WP_STATE was defined in
-    r12 and never registered, so the explain audit's WordPiece rows read
-    the tokenizer-compare run's warm trainer). Discover every module-level
-    session-memo dict by its declaration pattern, poison each with a
-    sentinel, wipe, and require all empty — a NEW memo that skips
-    registration fails here the round it lands."""
+    and every cold-cost measurement rely on; a memo that exists but is not
+    wiped silently serves warm state to a measurement that believes it
+    cleared everything (r14 finding: _WP_STATE was defined in r12 and
+    never registered, so the explain audit's WordPiece rows read the
+    tokenizer-compare run's warm trainer). Every shared stage is now a
+    self-registering ``session_stage``: import every package module,
+    poison every registered stage, wipe, and require all empty. The
+    source scan is inverted — a NEW hand-rolled module-level memo dict
+    (the pattern the stages replaced) fails here the round it lands."""
     import importlib
     import pathlib
+    import pkgutil
     import re
 
     import gmall_flink_spark
+    from gmall_flink_spark.sources.tables import (
+        _READERS,
+        _STAGES,
+        TABLES,
+        clear_session_memos,
+    )
 
-    from gmall_flink_spark.sources.tables import clear_session_memos
+    for mod in pkgutil.walk_packages(gmall_flink_spark.__path__, "gmall_flink_spark."):
+        importlib.import_module(mod.name)
+    names = {stage.__name__ for stage in _STAGES}
+    shared = {
+        "_doc_toks", "_doc_units", "_minhash_mx", "_doc_stats", "_lsh_cands",
+        "_exact_pairs", "_verified_pairs", "_components", "_substr_index",
+        "_sample_exact_jac", "_sample_components", "_word_occ", "_bpe_state",
+        "_bpe_sampled_state", "_unigram_vocab", "_wp_state", "_ivf_assigned",
+        "_neardup_pairs", "_pq_books", "_clean_ranked", "_pack_total_tokens",
+        "_scored_holdout", "_winnow_docs",
+    }
+    assert shared <= names, f"stages missing from the registry: {shared - names}"
+    assert set(_READERS) == set(TABLES)
+    assert all(r in _STAGES for r in _READERS.values())
+    assert len(_STAGES) >= len(shared) + len(TABLES), [s.__name__ for s in _STAGES]
+
+    sentinel = ("__clear_session_memos_coverage_test__",)
+    for stage in _STAGES:
+        stage.memo[sentinel] = None
+    clear_session_memos(disk_artifacts=False)
+    missed = [stage.__qualname__ for stage in _STAGES if stage.memo]
+    assert not missed, f"stages NOT cleared by clear_session_memos: {missed}"
 
     pkg_root = pathlib.Path(gmall_flink_spark.__file__).parent
-    found = []
-    for path in pkg_root.rglob("*.py"):
-        text = path.read_text()
-        mod = "gmall_flink_spark." + ".".join(
-            path.relative_to(pkg_root).with_suffix("").parts
-        )
-        for m in re.finditer(r"^(_[A-Z_0-9]+): dict\[tuple", text, re.M):
-            found.append((mod, m.group(1)))
-    assert len(found) >= 19, f"memo discovery broke: {found}"
-    sentinel = ("__clear_session_memos_coverage_test__",)
-    for modname, name in found:
-        getattr(importlib.import_module(modname), name)[sentinel] = None
-    clear_session_memos(disk_artifacts=False)
-    missed = [
-        f"{modname}.{name}"
-        for modname, name in found
-        if sentinel in getattr(importlib.import_module(modname), name)
+    hand_rolled = [
+        f"{path.relative_to(pkg_root)}:{m.group(1)}"
+        for path in pkg_root.rglob("*.py")
+        for m in re.finditer(r"^(_[A-Z_0-9]+): dict\[tuple", path.read_text(), re.M)
     ]
-    assert not missed, f"memos NOT cleared by clear_session_memos: {missed}"
+    assert not hand_rolled, f"hand-rolled memos (use session_stage): {hand_rolled}"
