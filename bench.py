@@ -469,9 +469,9 @@ def main() -> None:
         errors["streaming:log_split_fanout"] = f"{type(exc).__name__}: {exc}"[:300]
         n_rows, stream_sec = 0, 0.0
 
-    # Stateful-streaming throughput: exact first-per-day UV dedup through
-    # the applyInPandasWithState state store (D4) — the per-row keyed-state
-    # cost class, vs the map-only parse path above.
+    # Stateful-streaming throughput: exact first-per-day UV dedup (D4), a
+    # native dropDuplicates on (user, day) in the state store — the per-row
+    # keyed-state cost class, vs the map-only parse path above.
     from gmall_flink_spark.sources.tables import table as _table
     from gmall_flink_spark.streaming.stateful import first_per_day_stream
 

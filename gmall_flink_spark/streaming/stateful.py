@@ -8,12 +8,14 @@ with Flink ValueState:
                               at the watermark, the exact analogue of the
                               reference's 5s state TTL
                               (app/dws/DwsTradeSkuOrderWindow.java:117-119)
-  first_per_day_stream D4/D7  applyInPandasWithState: per-key set of seen
-                              days, emit only a key's first event of a day
+  first_per_day_stream D4/D7  dropDuplicates on (key, day) — the state
+                              store holds every seen key-day; emit only a
+                              key's first event of a day
                               (app/dws/DwsTrafficVcChArIsNewPageViewWindow
                               .java:79-128)
-  new_user_flags_stream D5    same state machine, plus an is_first_ever flag
-                              when the key was never seen before
+  new_user_flags_stream D5    applyInPandasWithState: per-key set of seen
+                              days, plus an is_first_ever flag when the
+                              key was never seen before
                               (app/dws/DwsTradeOrderWindow.java:62-91)
 
 Scale posture: state is partitioned by key in the state store; nothing is
@@ -26,13 +28,17 @@ under it (tests/test_streaming.py), with the throughput comparison in
 SCALE.md. The
 per-day states are bounded by (active keys × retained days); the reference
 bounds the same state with a 1-day TTL (W9) — here old dates could be
-pruned inside the state update function the same way.
+pruned inside the state update function the same way, and the D4 dedup
+state by a watermark on ``ts``.
 
 Semantics note (first-arrival vs event-time-first): like the reference's
 ValueState detectors, these emit the *first-arriving* row per key/day. The
 batch twin orders by event time, so equivalence holds when ingestion is
 event-time ordered per key (Kafka key-partitioned topics give this; the
-test harness replays files in event-time order).
+test harness replays files in event-time order). Within one micro-batch
+the pandas twins sort a key's rows by ``ts``; the native D4 dedup does not
+(see first_per_day_stream). A null ``ts`` has no day: the D5/D6 twins
+skip it, as the batch twins' ``collect_set`` does.
 """
 
 from __future__ import annotations
@@ -43,6 +49,7 @@ from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType
 
@@ -92,31 +99,18 @@ def keep_first_stream(
 
 def first_per_day_stream(sdf: DataFrame, key: str, ts: str = "ts") -> DataFrame:
     """D4/D7 streaming twin: emit each key's first event per day, appending
-    ``cur_date``. State: the set of days already emitted for the key."""
-    # copy the field list — StructType.add mutates, and reusing
-    # sdf.schema.fields would append cur_date to the INPUT schema too
-    out_schema = StructType(list(sdf.schema.fields)).add("cur_date", "string")
-    state_schema = "seen_days array<string>"
+    ``cur_date``. Native streaming dedup on ``(key, cur_date)`` in the
+    state store. No watermark is set, so every seen key-day stays in state.
 
-    # worker closures must be self-contained: Spark's Python workers run
-    # without this repo on their PYTHONPATH under a foreign driver session
-    def fn(
-        key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        seen = set(state.get[0]) if state.exists else set()
-        pdf = _batch_sorted(pdfs, [ts])
-        if pdf is not None:
-            pdf["cur_date"] = pdf[ts].dt.strftime("%Y-%m-%d")
-            fresh = pdf[~pdf["cur_date"].isin(seen)].drop_duplicates(
-                subset=["cur_date"], keep="first"
-            )
-            if len(fresh):
-                seen.update(fresh["cur_date"])
-                yield fresh
-        state.update((sorted(seen),))
-
-    return sdf.groupBy(key).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    The operator emits the first-ARRIVING row of each key-day; a later
+    micro-batch never re-emits a key-day, even when it carries an earlier
+    ``ts``. When one micro-batch holds several rows of a key-day, the
+    emitted row is any one of them, not the earliest-ts one (the rule
+    keep_first_stream and cart_add_uu_window_stream share). Consumers read
+    only the key set. A null ``ts`` gives a null ``cur_date``, which is a
+    key-day of its own, as in the batch twin's window partitioning."""
+    return sdf.withColumn("cur_date", F.date_format(ts, "yyyy-MM-dd")).dropDuplicates(
+        [key, "cur_date"]
     )
 
 
@@ -170,7 +164,7 @@ def daily_new_flags_stream(sdf: DataFrame, key: str, ts: str = "ts") -> DataFram
         pdf = _batch_sorted(pdfs, [ts])
         if pdf is not None:
             out: list[tuple] = []
-            for dstr in pdf[ts].dt.strftime("%Y-%m-%d").drop_duplicates():
+            for dstr in pdf[ts].dt.strftime("%Y-%m-%d").dropna().drop_duplicates():
                 if dstr in seen or dstr == min_day:
                     continue
                 if min_day is None:
@@ -223,7 +217,7 @@ def new_user_flags_stream(sdf: DataFrame, key: str, ts: str = "ts") -> DataFrame
         ever = bool(seen)
         pdf = _batch_sorted(pdfs, [ts])
         if pdf is not None:
-            days = pdf[ts].dt.strftime("%Y-%m-%d").drop_duplicates()
+            days = pdf[ts].dt.strftime("%Y-%m-%d").dropna().drop_duplicates()
             fresh = [d for d in days if d not in seen]
             if fresh:
                 rows = pd.DataFrame(
@@ -267,7 +261,7 @@ def returning_flags_stream(
         last = state.get[0] if state.exists else None
         pdf = _batch_sorted(pdfs, [ts])
         if pdf is not None:
-            days = [d for d in pdf[ts].dt.strftime("%Y-%m-%d").drop_duplicates()]
+            days = pdf[ts].dt.strftime("%Y-%m-%d").dropna().drop_duplicates()
             out_days, out_flags = [], []
             for dstr in days:
                 # <= keeps state monotone: a late-arriving earlier day is

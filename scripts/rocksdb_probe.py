@@ -11,7 +11,7 @@ D4/D5/D6 per-user states and the stream-stream join buffers needs. The
 probe quantifies the local-mode throughput cost of that headroom on the two
 state-heaviest operator classes:
 
-  - D4 first_per_day_stream (applyInPandasWithState: per-user seen-day set)
+  - D4 first_per_day_stream (native dropDuplicates: (user, day) key set)
   - D6 returning_flags_stream (applyInPandasWithState: last-active-day map)
 
 Usage: python scripts/rocksdb_probe.py [sf_dir]   (default /root/testdata/sf0.1)

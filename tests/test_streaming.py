@@ -135,6 +135,131 @@ def test_new_user_flags_stream_matches_batch(spark, events_slices):
     assert rows(got) == rows(batch)
 
 
+_TINY_SCHEMA = "user_id long, ts timestamp, event_id long"
+
+
+def tiny_source(spark, path, files):
+    """A file stream over ``files`` (lists of (user_id, ts, event_id)
+    rows), one parquet file each, read one file per micro-batch in list
+    order. An empty list writes an empty file."""
+    import pyarrow as _pa
+    import pyarrow.parquet as _pq
+
+    schema = _pa.schema([
+        ("user_id", _pa.int64()),
+        ("ts", _pa.timestamp("us", tz="UTC")),
+        ("event_id", _pa.int64()),
+    ])
+    os.makedirs(path)
+    for i, file_rows in enumerate(files):
+        cols = list(zip(*file_rows)) if file_rows else [[], [], []]
+        f = os.path.join(path, f"part-{i:04d}.parquet")
+        _pq.write_table(_pa.Table.from_arrays([_pa.array(c, t) for c, t in zip(
+            cols, schema.types)], schema=schema), f)
+        # the file source orders by modification time
+        os.utime(f, (1_700_000_000 + i, 1_700_000_000 + i))
+    src = spark.readStream.schema(_TINY_SCHEMA).option("maxFilesPerTrigger", "1")
+    batch = spark.read.schema(_TINY_SCHEMA).parquet(path)
+    return src.parquet(path), batch
+
+
+def _utc(day, hour):
+    import datetime as _dt
+
+    return _dt.datetime(2024, 1, day, hour, tzinfo=_dt.timezone.utc)
+
+
+def key_rows(df, cols):
+    """rows() for columns that may hold nulls (None has no ``<``)."""
+    return sorted(map(tuple, df.select(*cols).collect()), key=repr)
+
+
+def test_first_per_day_stream_degenerate_inputs(spark, tmp_path):
+    """D4 over a null ts, a null key, a single-row key and an empty file:
+    the stream's key-days equal the batch twin's, null day included."""
+    src, batch_src = tiny_source(spark, str(tmp_path / "src"), [
+        [(1, _utc(1, 10), 1), (1, None, 2), (None, _utc(1, 11), 3),
+         (2, _utc(2, 10), 4)],
+        [],
+    ])
+    got = key_rows(run_available_now(first_per_day_stream(src, "user_id")),
+                   ["user_id", "cur_date"])
+    assert got == key_rows(first_per_day(batch_src, "user_id"), ["user_id", "cur_date"])
+    assert got == [(1, "2024-01-01"), (1, None), (2, "2024-01-02"), (None, "2024-01-01")]
+
+
+@pytest.mark.parametrize("twin", ["new_user_flags", "daily_new_flags", "returning_flags"])
+def test_d5_d6_stream_twins_skip_null_days(spark, tmp_path, twin):
+    """A null ts has no day: the D5/D6 stream twins skip it, as the batch
+    twins' collect_set does, instead of mixing a NaN into day strings."""
+    from gmall_flink_spark.operators.dedup import returning_flags
+    from gmall_flink_spark.streaming.stateful import (
+        daily_new_flags_stream,
+        returning_flags_stream,
+    )
+
+    src, batch_src = tiny_source(spark, str(tmp_path / "src"), [
+        [(1, _utc(1, 10), 1), (1, None, 2), (2, None, 3), (3, _utc(2, 10), 4)],
+    ])
+    if twin == "returning_flags":
+        got = run_available_now(returning_flags_stream(src, "user_id"))
+        want = returning_flags(batch_src, "user_id")
+        assert key_rows(got, got.columns) == key_rows(want, got.columns)
+        return
+    want = key_rows(daily_new_flags(batch_src, "user_id"),
+                    ["user_id", "cur_date", "is_first_ever"])
+    assert want == [(1, "2024-01-01", 1), (3, "2024-01-02", 1)]
+    if twin == "new_user_flags":
+        got = run_available_now(new_user_flags_stream(src, "user_id"))
+        assert key_rows(got, ["user_id", "cur_date", "is_first_ever"]) == want
+    else:
+        got = run_available_now(daily_new_flags_stream(src, "user_id"))
+        assert key_rows(got, ["user_id", "cur_date", "new_delta"]) == want
+
+
+def test_first_per_day_stream_never_reemits_across_batches(spark, tmp_path):
+    """A key-day emitted in one micro-batch is not emitted again when a
+    later batch brings an EARLIER-ts row of it (first arrival wins)."""
+    src, _ = tiny_source(spark, str(tmp_path / "src"), [
+        [(1, _utc(1, 10), 1)],
+        [(1, _utc(1, 9), 2), (2, _utc(1, 9), 3)],
+    ])
+    seen: list[tuple] = []
+
+    def collect(df, batch_id):
+        seen.extend((batch_id, r.user_id, r.event_id) for r in df.collect())
+
+    run_available_now(first_per_day_stream(src, "user_id"), foreach_batch=collect)
+    assert sorted(seen) == [(0, 1, 1), (1, 2, 3)]
+
+
+def test_first_per_day_stream_one_input_row_per_key_day(spark, tmp_path):
+    """Within one micro-batch: exactly one output row per key-day, and that
+    row is one of the key-day's input rows."""
+    inp = [(1, _utc(1, 10), 1), (1, _utc(1, 8), 2), (1, _utc(1, 12), 3),
+           (1, _utc(2, 1), 4), (1, _utc(2, 0), 5), (2, _utc(1, 23), 6)]
+    src, _ = tiny_source(spark, str(tmp_path / "src"), [inp])
+    got = run_available_now(first_per_day_stream(src, "user_id")).collect()
+    keys = [(r.user_id, r.cur_date) for r in got]
+    assert sorted(keys) == [(1, "2024-01-01"), (1, "2024-01-02"), (2, "2024-01-01")]
+    by_id = {e: (u, ts) for u, ts, e in inp}
+    for r in got:
+        user, ts = by_id[r.event_id]
+        assert (r.user_id, r.ts.timestamp()) == (user, ts.timestamp())
+        assert ts.strftime("%Y-%m-%d") == r.cur_date
+
+
+def test_first_per_day_stream_plan_is_native_dedup(spark, tmp_path, capsys):
+    """D4 stays on the JVM state store: the streaming plan deduplicates
+    natively and sends no group through a Python state function."""
+    src, _ = tiny_source(spark, str(tmp_path / "src"), [[(1, _utc(1, 10), 1)]])
+    capsys.readouterr()
+    first_per_day_stream(src, "user_id").explain(extended=True)
+    plan = capsys.readouterr().out
+    assert "Deduplicate" in plan
+    assert "FlatMapGroupsInPandasWithState" not in plan
+
+
 def test_upsert_sink_reaches_batch_final_state(spark, events_slices):
     """K3/K4: replaying the changelog through the foreachBatch upsert MERGE
     ends at exactly the batch keep-last state."""
